@@ -212,23 +212,28 @@ def simhash(text_col: F.Column, bits: int = SIMHASH_BITS) -> F.Column:
     def _fold(harrs):
         n = len(harrs)
         out = np.zeros(n, dtype=np.int64)
-        if n == 0:
-            return pd.Series(out)
-        lens = np.fromiter((len(a) for a in harrs), dtype=np.int64, count=n)
-        total = int(lens.sum())
-        if total == 0:
-            return pd.Series(out)
-        flat = np.concatenate(
-            [np.asarray(a, dtype=np.int64) for a in harrs if len(a)]
+        # NULL text hashes to a NULL array and folds to NULL, as the Column
+        # fold did; "" hashes to [] and folds to 0
+        null = np.fromiter((a is None for a in harrs), dtype=bool, count=n)
+        lens = np.fromiter(
+            (0 if a is None else len(a) for a in harrs), dtype=np.int64, count=n
         )
-        ends = np.cumsum(lens)
-        starts = ends - lens
-        for b in range(nbits):
-            col = (flat >> np.int64(b)) & np.int64(1)
-            csum = np.concatenate(([0], np.cumsum(col)))
-            ones = csum[ends] - csum[starts]
-            out |= np.where(2 * ones > lens, np.int64(1) << np.int64(b), 0)
-        return pd.Series(out)
+        if lens.sum():
+            flat = np.concatenate(
+                [np.asarray(a, dtype=np.int64) for a, k in zip(harrs, lens) if k]
+            )
+            ends = np.cumsum(lens)
+            starts = ends - lens
+            for b in range(nbits):
+                col = (flat >> np.int64(b)) & np.int64(1)
+                csum = np.concatenate(([0], np.cumsum(col)))
+                ones = csum[ends] - csum[starts]
+                out |= np.where(2 * ones > lens, np.int64(1) << np.int64(b), 0)
+        if not null.any():
+            return pd.Series(out)
+        res = pd.Series(out, dtype="Int64")
+        res[null] = pd.NA
+        return res
 
     _fold.__annotations__ = {"harrs": pd.Series, "return": pd.Series}
     fold_udf = F.pandas_udf(_fold, "long")

@@ -353,6 +353,27 @@ class LakeTable:
             refs["branches"][self.ref] = int(version)
             self._write_refs(refs)
 
+    def _commit(
+        self, manifest: dict, version: int, summary: dict,
+        out_dir: str | None = None, **changes,
+    ) -> dict:
+        """Commit snapshot ``version``: ``manifest`` with ``changes`` applied,
+        parented on ``manifest`` unless ``changes`` names another ``parent``,
+        ``summary`` stamped with the commit time, and the footer stats of
+        any data written to ``out_dir``. Every operation commits through
+        here. Returns the committed manifest."""
+        new = {
+            **manifest,
+            "version": int(version),
+            "parent": int(manifest["version"]),
+            **changes,
+            "summary": {"committed_at_ms": int(time.time() * 1000), **summary},
+        }
+        if out_dir is not None:
+            new = self._with_file_stats(new, out_dir)
+        self._write_manifest(new)
+        return new
+
     # ------------------------------------------------------------------
     # refs: tags, branches, write-audit-publish
     # ------------------------------------------------------------------
@@ -484,20 +505,12 @@ class LakeTable:
                 f"v{version} is not an ancestor of {self.ref!r} head "
                 f"v{head_v}; cannot roll back across branches"
             )
-        target = self.manifest(version)
-        new_version = self._next_version()
-        self._write_manifest(
-            {
-                **target,
-                "version": new_version,
-                "parent": head_v,
-                "summary": {
-                    "committed_at_ms": int(time.time() * 1000),
-                    "rolled_back_to": version,
-                },
-            }
-        )
-        return new_version
+        return self._commit(
+            self.manifest(version),
+            self._next_version(),
+            {"rolled_back_to": version},
+            parent=head_v,
+        )["version"]
 
     # ------------------------------------------------------------------
     # reads
@@ -510,6 +523,20 @@ class LakeTable:
     # ------------------------------------------------------------------
     # file-level column statistics (manifest data skipping)
     # ------------------------------------------------------------------
+    @staticmethod
+    def _bucket_dirs(out_dir: str) -> dict[int, str]:
+        """``{bucket: path}`` of the ``_bucket=B`` dirs a write left in
+        ``out_dir`` (empty when nothing was written). A bucket whose rows
+        all went away has no dir."""
+        prefix = f"{BUCKET_COL}="
+        if not os.path.isdir(out_dir):
+            return {}
+        return {
+            int(name[len(prefix):]): os.path.join(out_dir, name)
+            for name in sorted(os.listdir(out_dir))
+            if name.startswith(prefix)
+        }
+
     @staticmethod
     def _footer_stats(out_dir: str) -> dict:
         """Per-bucket column ``[min, max]`` bounds for a freshly written
@@ -539,12 +566,7 @@ class LakeTable:
             return {}
 
         out: dict[str, dict] = {}
-        if not os.path.isdir(out_dir):
-            return out
-        for name in sorted(os.listdir(out_dir)):
-            if not name.startswith(f"{BUCKET_COL}="):
-                continue
-            bdir = os.path.join(out_dir, name)
+        for b, bdir in LakeTable._bucket_dirs(out_dir).items():
             agg: dict[str, list | None] = {}
             rows = 0
             for fn in sorted(os.listdir(bdir)):
@@ -578,7 +600,7 @@ class LakeTable:
                             cur[1] = max(cur[1], st.max)
             stats = {c: v for c, v in agg.items() if v is not None}
             stats["__rows"] = rows
-            out[name.split("=", 1)[1]] = stats
+            out[str(b)] = stats
         return out
 
     def _with_file_stats(self, new_manifest: dict, out_dir: str) -> dict:
@@ -1206,25 +1228,15 @@ class LakeTable:
             else f_
             for f_ in schema.fields
         ]
-        new_version = self._next_version()
-        self._write_manifest(
-            {
-                **manifest,
-                "version": new_version,
-                "parent": int(manifest["version"]),
-                "schema": json.loads(T.StructType(fields).json()),
-                "column_mapping": cm,
-                "next_column_id": next_id,
-                "key_columns": [
-                    new if k == old else k for k in manifest["key_columns"]
-                ],
-                "summary": {
-                    "committed_at_ms": int(time.time() * 1000),
-                    "renamed_column": {"from": old, "to": new},
-                },
-            }
-        )
-        return new_version
+        return self._commit(
+            manifest,
+            self._next_version(),
+            {"renamed_column": {"from": old, "to": new}},
+            schema=json.loads(T.StructType(fields).json()),
+            column_mapping=cm,
+            next_column_id=next_id,
+            key_columns=[new if k == old else k for k in manifest["key_columns"]],
+        )["version"]
 
     def drop_column(self, name: str) -> int:
         """Metadata-only column drop (``ALTER TABLE DROP COLUMN``).
@@ -1253,23 +1265,15 @@ class LakeTable:
         retired = list(manifest.get("retired_physical", []))
         retired.append(entry["physical"])
         fields = [f_ for f_ in schema.fields if f_.name != name]
-        new_version = self._next_version()
-        self._write_manifest(
-            {
-                **manifest,
-                "version": new_version,
-                "parent": int(manifest["version"]),
-                "schema": json.loads(T.StructType(fields).json()),
-                "column_mapping": cm,
-                "next_column_id": next_id,
-                "retired_physical": retired,
-                "summary": {
-                    "committed_at_ms": int(time.time() * 1000),
-                    "dropped_column": name,
-                },
-            }
-        )
-        return new_version
+        return self._commit(
+            manifest,
+            self._next_version(),
+            {"dropped_column": name},
+            schema=json.loads(T.StructType(fields).json()),
+            column_mapping=cm,
+            next_column_id=next_id,
+            retired_physical=retired,
+        )["version"]
 
     def _bucket_writer(self, df: DataFrame, manifest: dict):
         """The one parquet writer every data path uses: bucket-partitioned,
@@ -1304,6 +1308,49 @@ class LakeTable:
                 phys = cm.get(k, {}).get("physical", k)
                 w = w.option(f"parquet.bloom.filter.enabled#{phys}", "true")
         return w
+
+    def _write_version(
+        self, manifest: dict, rows: DataFrame | None
+    ) -> tuple[int, str, float]:
+        """Allocate the next snapshot version and write ``rows`` (if any)
+        into its ``data/v{N}`` dir. Returns ``(version, out_dir, write
+        seconds)``."""
+        version = self._next_version()
+        out_dir = os.path.join(self.root, "data", f"v{version}")
+        t_w = time.time()
+        if rows is not None:
+            self._bucket_writer(rows, manifest).parquet(out_dir)
+        return version, out_dir, round(time.time() - t_w, 3)
+
+    def _rewrite_buckets(
+        self, manifest: dict, dirty: set | list, rows: DataFrame | None,
+        summary: dict, **changes,
+    ) -> tuple[dict, float, float]:
+        """The copy-on-write core of every data-rewriting operation: write
+        ``rows`` — the new contents of the ``dirty`` buckets, clustered as
+        the caller wants its files (``None``: nothing) — into one fresh data
+        version, point each dirty bucket at it (or drop the bucket when the
+        write left it empty), fold the dirty buckets' pending deltas (the
+        caller read them delta-collapsed) and commit. Other buckets keep
+        their files. Returns ``(manifest, write seconds, commit seconds)``.
+        """
+        version, out_dir, write_s = self._write_version(manifest, rows)
+        t_c = time.time()
+        dirty = {int(b) for b in dirty}
+        buckets = {
+            b: v for b, v in manifest["buckets"].items() if int(b) not in dirty
+        }
+        buckets.update({str(b): version for b in self._bucket_dirs(out_dir)})
+        deltas = {
+            b: list(vs)
+            for b, vs in manifest.get("deltas", {}).items()
+            if int(b) not in dirty
+        }
+        committed = self._commit(
+            manifest, version, summary, out_dir,
+            buckets=buckets, deltas=deltas, **changes,
+        )
+        return committed, write_s, round(time.time() - t_c, 3)
 
     def _max_files_per_dirty_bucket(self, manifest: dict, dirty: list[int]) -> int:
         """Largest parquet-file count among the dirty buckets' current dirs.
@@ -1660,16 +1707,9 @@ class LakeTable:
                 f"not {self.root!r}"
             )
 
-        keys = manifest["key_columns"]
-        winner_counts = prep.winner_counts
-        winner_keys = prep.winner_keys
-        pre = prep.pre
         src_winners = prep.src_winners
-        bucket_counts = prep.bucket_counts
-        lineage = prep.lineage
         src_rows = prep.src_rows
         plan_b = prep.plan_b
-        user_fields = prep.user_fields
         new_schema_json, added, widened = self._evolve_schema(manifest, prep.incoming)
         # Register added columns in the column mapping (no-op for tables
         # that never renamed/dropped): rebinding the local manifest here
@@ -1680,7 +1720,7 @@ class LakeTable:
             manifest = {**manifest, **mapping_updates}
         phases = {"stats": prep.stats_seconds}
         try:
-            dirty = sorted(int(r[BUCKET_COL]) for r in bucket_counts)
+            dirty = sorted(int(r[BUCKET_COL]) for r in prep.bucket_counts)
 
             if mode == "defer":
                 # Bound read amplification: once a dirty bucket has
@@ -1693,250 +1733,199 @@ class LakeTable:
                 if max_pending >= compact_files_per_bucket:
                     mode = "rewrite"
 
+            summary = {"source_rows": src_rows, "dirty_buckets": len(dirty),
+                       "stream_id": stream_id, "epoch_id": epoch_id}
+            epochs = {} if epoch_id is None else {stream_id: epoch_id}
+            changes = {
+                "epochs": {**manifest["epochs"], **epochs},
+                "schema": new_schema_json or manifest["schema"],
+            }
             if mode == "defer":
                 # Merge-on-read: append collapsed winners as delta files and
                 # commit; the target is never read, so epoch cost is O(batch).
-                collapsed = src_winners  # both plans pre-collapse to one row/key
-                new_version = self._next_version()
-                out_dir = os.path.join(self.root, "data", f"v{new_version}")
-                t_w = time.time()
-                self._bucket_writer(
-                    collapsed.repartition(max(len(dirty), 1), F.col(BUCKET_COL)),
+                # Both plans pre-collapse src_winners to one row per key.
+                version, out_dir, phases["write"] = self._write_version(
                     manifest,
-                ).parquet(out_dir)
-                phases["write"] = round(time.time() - t_w, 3)
+                    src_winners.repartition(max(len(dirty), 1), F.col(BUCKET_COL)),
+                )
                 t_c = time.time()
-                written = {
-                    int(name.split("=", 1)[1])
-                    for name in os.listdir(out_dir)
-                    if name.startswith(f"{BUCKET_COL}=")
-                }
-                delta_map = {
+                deltas = {
                     b: list(vs) for b, vs in manifest.get("deltas", {}).items()
                 }
-                for b in sorted(written):
-                    delta_map.setdefault(str(b), []).append(new_version)
-                self._write_manifest(
-                    self._with_file_stats({
-                        **manifest,
-                        "version": new_version,
-                        "parent": int(manifest["version"]),
-                        "deltas": delta_map,
-                        "epochs": {**manifest["epochs"]}
-                        if epoch_id is None
-                        else {**manifest["epochs"], stream_id: epoch_id},
-                        "schema": new_schema_json or manifest["schema"],
-                        "summary": {
-                            "committed_at_ms": int(time.time() * 1000),
-                            "source_rows": src_rows,
-                            "dirty_buckets": len(dirty),
-                            "mode": "defer",
-                        },
-                    }, out_dir)
+                for b in self._bucket_dirs(out_dir):
+                    deltas.setdefault(str(b), []).append(version)
+                committed = self._commit(
+                    manifest, version, {**summary, "mode": "defer"}, out_dir,
+                    deltas=deltas, **changes,
                 )
                 phases["commit"] = round(time.time() - t_c, 3)
-                return MergeStats(
-                    epoch_id=epoch_id,
-                    skipped=False,
-                    source_rows=src_rows,
-                    dirty_buckets=len(dirty),
-                    total_buckets=len(manifest["buckets"]),
-                    # the appended delta rows ARE the winner set (one
-                    # LWW-collapsed row per key) — same meaning as the
-                    # rewrite path's count; replicate() reports it
-                    rows_written=prep.n_winner_keys,
-                    schema_added_columns=added,
-                    schema_widened_columns=widened,
-                    seconds=time.time() - t0,
-                    lineage=lineage,
-                    phases=phases,
-                )
-
-            target = self._read_buckets(manifest, dirty)
-            if target is not None:
-                # Align target to the evolved column set. Stored rows carry their
-                # own tombstone flag: delete markers are RETAINED in the table
-                # (filtered at read) so their LSN keeps shielding the key from
-                # late-arriving lower-LSN inserts — batches need not be LSN-ordered.
-                for f_ in user_fields:
-                    if f_.name not in target.columns:
-                        target = target.withColumn(f_.name, F.lit(None).cast(f_.dataType))
-                if TOMBSTONE_COL not in target.columns:
-                    target = target.withColumn(TOMBSTONE_COL, F.lit(False))
-
-            # Combine source winners with the dirty-target rows. Two plans,
-            # matching the collapse above:
-            #
-            # (a) broadcast-merge (default): untouched target rows are carried
-            #     MAP-ONLY (one broadcast probe against the winner-key set);
-            #     rows whose key this epoch touched resolve in one
-            #     winner-sized aggregation shared with the source prefilter
-            #     (see the plan (a) construction above). NO shuffle is
-            #     proportional to table or batch size — at 100 TB an
-            #     update-heavy epoch rewrites its dirty buckets in place of a
-            #     cluster-wide exchange; the only exchange carries ~one row
-            #     per touched key.
-            #     File growth: carried rows write ~one file per input split, so
-            #     a bucket gains ~one file per epoch; once any dirty bucket
-            #     exceeds compact_files_per_bucket the epoch's write runs
-            #     through the compacting repartition below instead (amortized
-            #     compaction-on-write, Iceberg rewrite_data_files folded into
-            #     the merge).
-            # (b) union + LWW aggregation: when winners exceed the broadcast
-            #     limit — one key-hash shuffle of winners ∪ dirty-target rows.
-            #     Source wins equal-LSN ties by packing (lsn, src) into one
-            #     long: a plain-column max_by ordering stays inside whole-stage
-            #     codegen (struct orderings drop to an interpreted comparator
-            #     that measured 5-12x slower), and sessions should raise
-            #     spark.sql.objectHashAggregate.sortBased.fallbackThreshold
-            #     (default 128 keys => every epoch silently sorts; see
-            #     main.build_session).
-            # A delta-collapsed target already pays a key-hash aggregation in
-            # _read_buckets, scattering carried rows across shuffle
-            # partitions — force the compacting repartition then, or a bucket
-            # gains up to shuffle-partitions small files in one epoch.
-            has_deltas = any(
-                manifest.get("deltas", {}).get(str(b)) for b in dirty
-            )
-            compact = plan_b or has_deltas or self._max_files_per_dirty_bucket(
-                manifest, dirty
-            ) >= compact_files_per_bucket
-            if not plan_b:
-                if target is not None:
-                    # ONE probe of the target against the winner-key set
-                    # (struct-wrapped keys: null-safe equality, still a
-                    # BroadcastHashJoin) splits it into:
-                    #   carried  — keys this epoch never touched: rewritten
-                    #              MAP-ONLY, no shuffle, no comparison;
-                    #   contested — target rows whose key has a winner: the
-                    #              LWW decision (including the stale-late-
-                    #              arrival case) moves into the SAME small
-                    #              aggregation that collapses the prefiltered
-                    #              source rows, via the packed
-                    #              (lsn*2 + source_flag) ordering — source
-                    #              wins equal LSN, so replay is idempotent.
-                    # This removes the former second target probe + stale-set
-                    # broadcast build + anti-join: per epoch, two broadcast
-                    # builds and one winner-sized exchange, total.
-                    wk = winner_keys.select(
-                        F.struct(*keys).alias("__jk"), F.col(LSN_COL).alias("__w_lsn")
-                    )
-                    tj = target.withColumn("__jk", F.struct(*keys)).join(
-                        F.broadcast(wk), "__jk", "left"
-                    )
-                    carried = tj.filter(F.col("__w_lsn").isNull()).drop(
-                        "__jk", "__w_lsn"
-                    )
-                    contested = tj.filter(F.col("__w_lsn").isNotNull()).drop(
-                        "__jk", "__w_lsn"
-                    )
-                    combined = pre.withColumn("__src", F.lit(1)).unionByName(
-                        contested.withColumn("__src", F.lit(0)),
-                        allowMissingColumns=True,
-                    )
-                    pay2 = [
-                        c
-                        for c in combined.columns
-                        if c not in keys and c not in ("__h", "__src")
-                    ]
-                    ordering = F.col(LSN_COL) * 2 + F.col("__src")
-                    resolved = (
-                        combined.groupBy(*keys)
-                        .agg(F.max_by(F.struct(*pay2), ordering).alias("__w"))
-                        .select(*keys, *[F.col(f"__w.{c}").alias(c) for c in pay2])
-                    )
-                    live = carried.unionByName(
-                        resolved if compact else resolved.repartition(
-                            max(len(dirty), 1), F.col(BUCKET_COL)
-                        ),
-                        allowMissingColumns=True,
-                    )
-                else:
-                    live = src_winners
             else:
-                tgt = (
-                    [target.withColumn("__src", F.lit(0))] if target is not None else []
+                committed, phases["write"], phases["commit"] = self._rewrite_buckets(
+                    manifest,
+                    dirty,
+                    self._merge_rows(
+                        manifest, dirty, prep, compact_files_per_bucket
+                    ),
+                    summary,
+                    **changes,
                 )
-                combined = src_winners.withColumn("__src", F.lit(1))
-                for t_ in tgt:
-                    combined = combined.unionByName(t_, allowMissingColumns=True)
-                pay2 = [c for c in combined.columns if c not in keys]
-                ordering = F.col(LSN_COL) * 2 + F.col("__src")
-                live = (
-                    combined.groupBy(*keys)
-                    .agg(F.max_by(F.struct(*pay2), ordering).alias("__w"))
-                    .select(*keys, *[F.col(f"__w.{c}").alias(c) for c in pay2])
-                    .drop("__src")
-                )
-
-            # Write only dirty buckets into the new data version. The
-            # compacting path bounds output to one file per touched bucket;
-            # the map-only path streams carried rows straight from their
-            # bucket files into the new version.
-            new_version = self._next_version()
-            out_dir = os.path.join(self.root, "data", f"v{new_version}")
-            if compact:
-                live = live.repartition(max(len(dirty), 1), F.col(BUCKET_COL))
-            t_w = time.time()
-            self._bucket_writer(live, manifest).parquet(out_dir)
-            phases["write"] = round(time.time() - t_w, 3)
         finally:
             # unpersist on every exit path -- a write/schema failure must
             # not leak the cached winners for the session's lifetime
-            winner_counts.unpersist()
+            prep.winner_counts.unpersist()
             if plan_b:
                 src_winners.unpersist()
-        t_c = time.time()
-        written = {
-            int(name.split("=", 1)[1])
-            for name in os.listdir(out_dir)
-            if name.startswith(f"{BUCKET_COL}=")
-        }
-
-        buckets = dict(manifest["buckets"])
-        for b in dirty:
-            if b in written:
-                buckets[str(b)] = new_version
-            else:
-                buckets.pop(str(b), None)  # bucket fully deleted
-        # A rewrite folds any pending deltas of its dirty buckets into the
-        # new base files (the target was delta-collapsed by _read_buckets).
-        delta_map = {
-            b: list(vs)
-            for b, vs in manifest.get("deltas", {}).items()
-            if int(b) not in set(dirty)
-        }
-        new_manifest = {
-            **manifest,
-            "version": new_version,
-            "parent": int(manifest["version"]),
-            "buckets": buckets,
-            "deltas": delta_map,
-            "epochs": {**manifest["epochs"]}
-            if epoch_id is None
-            else {**manifest["epochs"], stream_id: epoch_id},
-            "schema": new_schema_json or manifest["schema"],
-            "summary": {
-                "committed_at_ms": int(time.time() * 1000),
-                "source_rows": src_rows,
-                "dirty_buckets": len(dirty),
-            },
-        }
-        self._write_manifest(self._with_file_stats(new_manifest, out_dir))
-        phases["commit"] = round(time.time() - t_c, 3)
         return MergeStats(
             epoch_id=epoch_id,
             skipped=False,
             source_rows=src_rows,
             dirty_buckets=len(dirty),
-            total_buckets=len(buckets),
+            total_buckets=len(committed["buckets"]),
+            # one LWW-collapsed row per key: in defer mode exactly the
+            # appended delta rows; replicate() reports it
             rows_written=prep.n_winner_keys,
             schema_added_columns=added,
             schema_widened_columns=widened,
             seconds=time.time() - t0,
-            lineage=lineage,
+            lineage=prep.lineage,
             phases=phases,
         )
+
+    def _merge_rows(
+        self,
+        manifest: dict,
+        dirty: list[int],
+        prep: MergePrep,
+        compact_files_per_bucket: int,
+    ) -> DataFrame:
+        """The new contents of a rewrite-mode merge's dirty buckets: the
+        prepared source winners LWW-combined with the dirty target rows."""
+        keys = manifest["key_columns"]
+        src_winners = prep.src_winners
+        plan_b = prep.plan_b
+        target = self._read_buckets(manifest, dirty)
+        if target is not None:
+            # Align target to the evolved column set. Stored rows carry their
+            # own tombstone flag: delete markers are RETAINED in the table
+            # (filtered at read) so their LSN keeps shielding the key from
+            # late-arriving lower-LSN inserts — batches need not be LSN-ordered.
+            for f_ in prep.user_fields:
+                if f_.name not in target.columns:
+                    target = target.withColumn(f_.name, F.lit(None).cast(f_.dataType))
+            if TOMBSTONE_COL not in target.columns:
+                target = target.withColumn(TOMBSTONE_COL, F.lit(False))
+
+        # Combine source winners with the dirty-target rows. Two plans,
+        # matching the collapse above:
+        #
+        # (a) broadcast-merge (default): untouched target rows are carried
+        #     MAP-ONLY (one broadcast probe against the winner-key set);
+        #     rows whose key this epoch touched resolve in one
+        #     winner-sized aggregation shared with the source prefilter
+        #     (see the plan (a) construction above). NO shuffle is
+        #     proportional to table or batch size — at 100 TB an
+        #     update-heavy epoch rewrites its dirty buckets in place of a
+        #     cluster-wide exchange; the only exchange carries ~one row
+        #     per touched key.
+        #     File growth: carried rows write ~one file per input split, so
+        #     a bucket gains ~one file per epoch; once any dirty bucket
+        #     exceeds compact_files_per_bucket the epoch's write runs
+        #     through the compacting repartition below instead (amortized
+        #     compaction-on-write, Iceberg rewrite_data_files folded into
+        #     the merge).
+        # (b) union + LWW aggregation: when winners exceed the broadcast
+        #     limit — one key-hash shuffle of winners ∪ dirty-target rows.
+        #     Source wins equal-LSN ties by packing (lsn, src) into one
+        #     long: a plain-column max_by ordering stays inside whole-stage
+        #     codegen (struct orderings drop to an interpreted comparator
+        #     that measured 5-12x slower), and sessions should raise
+        #     spark.sql.objectHashAggregate.sortBased.fallbackThreshold
+        #     (default 128 keys => every epoch silently sorts; see
+        #     main.build_session).
+        # A delta-collapsed target already pays a key-hash aggregation in
+        # _read_buckets, scattering carried rows across shuffle
+        # partitions — force the compacting repartition then, or a bucket
+        # gains up to shuffle-partitions small files in one epoch.
+        has_deltas = any(
+            manifest.get("deltas", {}).get(str(b)) for b in dirty
+        )
+        compact = plan_b or has_deltas or self._max_files_per_dirty_bucket(
+            manifest, dirty
+        ) >= compact_files_per_bucket
+        if not plan_b:
+            if target is not None:
+                # ONE probe of the target against the winner-key set
+                # (struct-wrapped keys: null-safe equality, still a
+                # BroadcastHashJoin) splits it into:
+                #   carried  — keys this epoch never touched: rewritten
+                #              MAP-ONLY, no shuffle, no comparison;
+                #   contested — target rows whose key has a winner: the
+                #              LWW decision (including the stale-late-
+                #              arrival case) moves into the SAME small
+                #              aggregation that collapses the prefiltered
+                #              source rows, via the packed
+                #              (lsn*2 + source_flag) ordering — source
+                #              wins equal LSN, so replay is idempotent.
+                # This removes the former second target probe + stale-set
+                # broadcast build + anti-join: per epoch, two broadcast
+                # builds and one winner-sized exchange, total.
+                wk = prep.winner_keys.select(
+                    F.struct(*keys).alias("__jk"), F.col(LSN_COL).alias("__w_lsn")
+                )
+                tj = target.withColumn("__jk", F.struct(*keys)).join(
+                    F.broadcast(wk), "__jk", "left"
+                )
+                carried = tj.filter(F.col("__w_lsn").isNull()).drop(
+                    "__jk", "__w_lsn"
+                )
+                contested = tj.filter(F.col("__w_lsn").isNotNull()).drop(
+                    "__jk", "__w_lsn"
+                )
+                combined = prep.pre.withColumn("__src", F.lit(1)).unionByName(
+                    contested.withColumn("__src", F.lit(0)),
+                    allowMissingColumns=True,
+                )
+                pay2 = [
+                    c
+                    for c in combined.columns
+                    if c not in keys and c not in ("__h", "__src")
+                ]
+                ordering = F.col(LSN_COL) * 2 + F.col("__src")
+                resolved = (
+                    combined.groupBy(*keys)
+                    .agg(F.max_by(F.struct(*pay2), ordering).alias("__w"))
+                    .select(*keys, *[F.col(f"__w.{c}").alias(c) for c in pay2])
+                )
+                live = carried.unionByName(
+                    resolved if compact else resolved.repartition(
+                        max(len(dirty), 1), F.col(BUCKET_COL)
+                    ),
+                    allowMissingColumns=True,
+                )
+            else:
+                live = src_winners
+        else:
+            tgt = (
+                [target.withColumn("__src", F.lit(0))] if target is not None else []
+            )
+            combined = src_winners.withColumn("__src", F.lit(1))
+            for t_ in tgt:
+                combined = combined.unionByName(t_, allowMissingColumns=True)
+            pay2 = [c for c in combined.columns if c not in keys]
+            ordering = F.col(LSN_COL) * 2 + F.col("__src")
+            live = (
+                combined.groupBy(*keys)
+                .agg(F.max_by(F.struct(*pay2), ordering).alias("__w"))
+                .select(*keys, *[F.col(f"__w.{c}").alias(c) for c in pay2])
+                .drop("__src")
+            )
+
+        # The compacting path bounds output to one file per touched bucket;
+        # the map-only path streams carried rows straight from their bucket
+        # files into the new version.
+        if compact:
+            live = live.repartition(max(len(dirty), 1), F.col(BUCKET_COL))
+        return live
 
     def bootstrap(
         self,
@@ -2086,8 +2075,6 @@ class LakeTable:
         if not todo:
             return 0
         folded = self._read_buckets(manifest, todo)
-        new_version = self._next_version()
-        out_dir = os.path.join(self.root, "data", f"v{new_version}")
         clustered = folded.repartition(len(todo), F.col(BUCKET_COL))
         if zorder_by:
             clustered = clustered.withColumn(
@@ -2098,35 +2085,11 @@ class LakeTable:
             # buckets in one task, and partitionBy splits them back into
             # separate files — each must stay internally sorted
             clustered = clustered.sortWithinPartitions(BUCKET_COL, *sort_by)
-        self._bucket_writer(clustered, manifest).parquet(out_dir)
-        written = {
-            int(name.split("=", 1)[1])
-            for name in os.listdir(out_dir)
-            if name.startswith(f"{BUCKET_COL}=")
-        }
-        bmap = dict(manifest["buckets"])
-        for b in todo:
-            if b in written:
-                bmap[str(b)] = new_version
-            else:
-                bmap.pop(str(b), None)
-        self._write_manifest(
-            self._with_file_stats({
-                **manifest,
-                "version": new_version,
-                "parent": int(manifest["version"]),
-                "buckets": bmap,
-                "deltas": {
-                    b: list(vs) for b, vs in pending.items() if int(b) not in set(todo)
-                },
-                "summary": {
-                    "committed_at_ms": int(time.time() * 1000),
-                    "compacted_buckets": len(todo),
-                    **({"sort_order": list(sort_by)} if sort_by else {}),
-                    **({"zorder": list(zorder_by)} if zorder_by else {}),
-                },
-            }, out_dir)
-        )
+        self._rewrite_buckets(manifest, todo, clustered, {
+            "compacted_buckets": len(todo),
+            **({"sort_order": list(sort_by)} if sort_by else {}),
+            **({"zorder": list(zorder_by)} if zorder_by else {}),
+        })
         return len(todo)
 
     def rebucket(self, new_num_buckets: int) -> int:
@@ -2155,12 +2118,9 @@ class LakeTable:
         if n == int(manifest["num_buckets"]):
             return 0
         keys = manifest["key_columns"]
-        new_version = self._next_version()
         df = self._read_buckets(manifest, None)
-        bmap: dict[str, int] = {}
-        out_dir = os.path.join(self.root, "data", f"v{new_version}")
         if df is not None:
-            self._bucket_writer(
+            df = (
                 df.drop(BUCKET_COL)
                 .withColumn(
                     BUCKET_COL,
@@ -2168,29 +2128,17 @@ class LakeTable:
                         F.xxhash64(*[F.col(k) for k in keys]), F.lit(n)
                     ).cast("int"),
                 )
-                .repartition(n, F.col(BUCKET_COL)),
-                manifest,
-            ).parquet(out_dir)
-            bmap = {
-                name.split("=", 1)[1]: new_version
-                for name in os.listdir(out_dir)
-                if name.startswith(f"{BUCKET_COL}=")
-            }
-        self._write_manifest(
-            self._with_file_stats({
-                **manifest,
-                "version": new_version,
-                "parent": int(manifest["version"]),
-                "num_buckets": n,
-                "buckets": bmap,
-                "deltas": {},  # folded into the rewrite by _read_buckets
-                "summary": {
-                    "committed_at_ms": int(time.time() * 1000),
-                    "rebucketed_to": n,
-                },
-            }, out_dir)
+                .repartition(n, F.col(BUCKET_COL))
+            )
+        # every old bucket and delta is dirty: the whole table re-hashes
+        committed, _, _ = self._rewrite_buckets(
+            manifest,
+            {*manifest["buckets"], *manifest.get("deltas", {})},
+            df,
+            {"rebucketed_to": n},
+            num_buckets=n,
         )
-        return len(bmap)
+        return len(committed["buckets"])
 
     # ------------------------------------------------------------------
     # retention
@@ -2366,57 +2314,10 @@ class LakeTable:
         that still holds such markers into a new snapshot; returns the number
         of buckets rewritten.
         """
-        manifest = self.manifest()
-        current = self._read_buckets(manifest, None)
-        if current is None or TOMBSTONE_COL not in current.columns:
-            return 0
-        is_purgeable = F.coalesce(F.col(TOMBSTONE_COL), F.lit(False)) & (
-            F.col(LSN_COL) < below_lsn
-        )
-        dirty = [
-            int(r[BUCKET_COL])
-            for r in current.filter(is_purgeable).select(BUCKET_COL).distinct().collect()
-        ]
-        if not dirty:
-            return 0
-        keep = self._read_buckets(manifest, dirty).filter(~is_purgeable)
-        new_version = self._next_version()
-        out_dir = os.path.join(self.root, "data", f"v{new_version}")
-        self._bucket_writer(
-            keep.repartition(len(dirty), F.col(BUCKET_COL)), manifest
-        ).parquet(out_dir)
-        written = {
-            int(name.split("=", 1)[1])
-            for name in os.listdir(out_dir)
-            if name.startswith(f"{BUCKET_COL}=")
-        }
-        buckets = dict(manifest["buckets"])
-        for b in dirty:
-            if b in written:
-                buckets[str(b)] = new_version
-            else:
-                buckets.pop(str(b), None)  # bucket held only purged markers
-        self._write_manifest(
-            self._with_file_stats({
-                **manifest,
-                "version": new_version,
-                "parent": int(manifest["version"]),
-                "buckets": buckets,
-                # rewritten buckets absorbed their pending deltas (the read
-                # above was delta-collapsed)
-                "deltas": {
-                    b: list(vs)
-                    for b, vs in manifest.get("deltas", {}).items()
-                    if int(b) not in set(dirty)
-                },
-                "summary": {
-                    "committed_at_ms": int(time.time() * 1000),
-                    "purged_below_lsn": below_lsn,
-                    "rewritten_buckets": len(dirty),
-                },
-            }, out_dir)
-        )
-        return len(dirty)
+        return self._rewrite_where(
+            F.col(LSN_COL) < below_lsn, None, None, "purge_tombstones",
+            markers=True, purged_below_lsn=below_lsn,
+        )["buckets_rewritten"]
 
     def purge_below_watermark(self, metrics, stream_id: str | None = None) -> dict:
         """Retention as an operational one-liner: purge delete markers the
@@ -2445,25 +2346,29 @@ class LakeTable:
             "partitions": len(hw),
         }
 
-
     def _rewrite_where(
         self,
         condition: Column,
         assignments: dict[str, Column] | None,
         prune: dict | None,
         op: str,
+        markers: bool = False,
+        **summary,
     ) -> dict:
-        """Shared copy-on-write skeleton for :meth:`delete_where` /
-        :meth:`update_where`: find the buckets holding live rows that match
+        """Shared copy-on-write skeleton for :meth:`delete_where`,
+        :meth:`update_where` and :meth:`purge_tombstones`: find the buckets
+        holding live rows (delete markers when ``markers``) that match
         ``condition`` (one narrow scan + a <= num_buckets-row aggregation),
-        rewrite ONLY those buckets, commit one new snapshot. Untouched
+        drop or update (``assignments``) them by rewriting ONLY those
+        buckets, commit one new snapshot with ``summary`` added. Untouched
         buckets keep referencing their existing files — the rewrite cost is
         proportional to the matched data, not the table.
         """
+        nothing = {"op": op, "rows_matched": 0, "buckets_rewritten": 0}
         manifest = self.manifest()
         current = self._read_buckets(manifest, None, prune=prune)
         if current is None:
-            return {"op": op, "rows_matched": 0, "buckets_rewritten": 0}
+            return nothing
         # Three-valued logic: a NULL predicate row must be treated as
         # unmatched (kept by DELETE, untouched by UPDATE) — `filter(~NULL)`
         # would silently DROP it from the rewrite, losing the row.
@@ -2471,10 +2376,13 @@ class LakeTable:
         if TOMBSTONE_COL in current.columns:
             # mutations address live rows only; delete markers are retention's
             # business (purge_tombstones), never a predicate DELETE/UPDATE's
-            live = live & ~F.coalesce(F.col(TOMBSTONE_COL), F.lit(False))
+            marker = F.coalesce(F.col(TOMBSTONE_COL), F.lit(False))
+            live = live & (marker if markers else ~marker)
+        elif markers:
+            return nothing
         hits = current.filter(live).groupBy(BUCKET_COL).count().collect()
         if not hits:
-            return {"op": op, "rows_matched": 0, "buckets_rewritten": 0}
+            return nothing
         dirty = sorted(int(r[BUCKET_COL]) for r in hits)
         matched = int(sum(r["count"] for r in hits))
         df = self._read_buckets(manifest, dirty)
@@ -2490,42 +2398,12 @@ class LakeTable:
                 if c in assignments else F.col(c)
                 for c in df.columns
             ])
-        new_version = self._next_version()
-        out_dir = os.path.join(self.root, "data", f"v{new_version}")
-        self._bucket_writer(
-            out.repartition(len(dirty), F.col(BUCKET_COL)), manifest
-        ).parquet(out_dir)
-        written = {
-            int(name.split("=", 1)[1])
-            for name in os.listdir(out_dir)
-            if name.startswith(f"{BUCKET_COL}=")
-        }
-        buckets = dict(manifest["buckets"])
-        for b in dirty:
-            if b in written:
-                buckets[str(b)] = new_version
-            else:
-                buckets.pop(str(b), None)  # a delete emptied the bucket
-        self._write_manifest(
-            self._with_file_stats({
-                **manifest,
-                "version": new_version,
-                "parent": int(manifest["version"]),
-                "buckets": buckets,
-                # rewritten buckets were read delta-collapsed: their pending
-                # merge-on-read deltas are folded into the new base files
-                "deltas": {
-                    b: list(vs)
-                    for b, vs in manifest.get("deltas", {}).items()
-                    if int(b) not in set(dirty)
-                },
-                "summary": {
-                    "committed_at_ms": int(time.time() * 1000),
-                    "op": op,
-                    "rows_matched": matched,
-                    "rewritten_buckets": len(dirty),
-                },
-            }, out_dir)
+        self._rewrite_buckets(
+            manifest,
+            dirty,
+            out.repartition(len(dirty), F.col(BUCKET_COL)),
+            {"op": op, "rows_matched": matched,
+             "rewritten_buckets": len(dirty), **summary},
         )
         return {"op": op, "rows_matched": matched, "buckets_rewritten": len(dirty)}
 
@@ -2552,6 +2430,19 @@ class LakeTable:
         """
         return self._rewrite_where(condition, None, prune, "delete_where")
 
+    def _check_assignments(self, manifest: dict, assignments, op: str) -> None:
+        """Reject SET targets that are key or bookkeeping columns, or that
+        the table schema lacks."""
+        engine = {*manifest["key_columns"], LSN_COL, BUCKET_COL, TOMBSTONE_COL}
+        bad = sorted(set(assignments) & engine)
+        if bad:
+            raise ValueError(f"{op} cannot assign key/bookkeeping columns: {bad}")
+        schema = self._table_schema(manifest)
+        known = {f_.name for f_ in schema.fields} if schema is not None else set()
+        unknown = sorted(set(assignments) - known)
+        if unknown:
+            raise ValueError(f"{op}: no such columns: {unknown}")
+
     def update_where(
         self,
         condition: Column,
@@ -2570,18 +2461,7 @@ class LakeTable:
         ingest's property. Bucket selection, stats pruning, and commit
         mechanics are exactly :meth:`delete_where`'s.
         """
-        keys = set(self.manifest().get("key_columns", []))
-        forbidden = keys | {LSN_COL, BUCKET_COL, TOMBSTONE_COL}
-        bad = sorted(set(assignments) & forbidden)
-        if bad:
-            raise ValueError(
-                f"update_where cannot assign key/bookkeeping columns: {bad}"
-            )
-        schema = self._table_schema(self.manifest())
-        known = {f_.name for f_ in schema.fields} if schema is not None else set()
-        unknown = sorted(set(assignments) - known)
-        if unknown:
-            raise ValueError(f"update_where: no such columns: {unknown}")
+        self._check_assignments(self.manifest(), assignments, "update_where")
         return self._rewrite_where(condition, assignments, prune, "update_where")
 
     def merge_into(
@@ -2648,15 +2528,7 @@ class LakeTable:
         # to conditions/assignments under ``src`` (e.g. an op discriminator)
         # but never insert — only schema columns map into the table
         # (merge_into does not evolve schemas; that's merge()'s business).
-        forbidden = set(keys) | {LSN_COL, BUCKET_COL, TOMBSTONE_COL}
-        bad = sorted(set(matched_update or {}) & forbidden)
-        if bad:
-            raise ValueError(
-                f"merge_into cannot assign key/bookkeeping columns: {bad}"
-            )
-        unknown = sorted(set(matched_update or {}) - set(table_cols))
-        if unknown:
-            raise ValueError(f"merge_into: no such columns: {unknown}")
+        self._check_assignments(manifest, matched_update or {}, "merge_into")
 
         src_payload = [c for c in source.columns if c not in keys]
         # cast source keys to the TABLE's key types before hashing: xxhash64
@@ -2804,44 +2676,17 @@ class LakeTable:
             out = with_action.filter(F.col("__a").isin("U", "I", "C")).select(
                 F.col(BUCKET_COL), *[out_col(c) for c in cur_cols]
             )
-            new_version = self._next_version()
-            out_dir = os.path.join(self.root, "data", f"v{new_version}")
-            self._bucket_writer(
-                out.repartition(len(dirty), F.col(BUCKET_COL)), manifest
-            ).parquet(out_dir)
-            written = {
-                int(name.split("=", 1)[1])
-                for name in os.listdir(out_dir)
-                if name.startswith(f"{BUCKET_COL}=")
-            }
-            buckets = dict(manifest["buckets"])
-            for b in dirty:
-                if b in written:
-                    buckets[str(b)] = new_version  # adds insert-only buckets too
-                else:
-                    buckets.pop(str(b), None)      # a delete emptied the bucket
-            self._write_manifest(
-                self._with_file_stats({
-                    **manifest,
-                    "version": new_version,
-                    "parent": int(manifest["version"]),
-                    "buckets": buckets,
-                    # dirty buckets were read delta-collapsed: their pending
-                    # merge-on-read deltas are folded into the new base files
-                    "deltas": {
-                        b: list(vs)
-                        for b, vs in manifest.get("deltas", {}).items()
-                        if int(b) not in set(dirty)
-                    },
-                    "summary": {
-                        "committed_at_ms": int(time.time() * 1000),
-                        "op": "merge_into",
-                        "rows_updated": result["rows_updated"],
-                        "rows_deleted": result["rows_deleted"],
-                        "rows_inserted": result["rows_inserted"],
-                        "rewritten_buckets": len(dirty),
-                    },
-                }, out_dir)
+            self._rewrite_buckets(
+                manifest,
+                dirty,
+                out.repartition(len(dirty), F.col(BUCKET_COL)),
+                {
+                    "op": "merge_into",
+                    "rows_updated": result["rows_updated"],
+                    "rows_deleted": result["rows_deleted"],
+                    "rows_inserted": result["rows_inserted"],
+                    "rewritten_buckets": len(dirty),
+                },
             )
             result["buckets_rewritten"] = len(dirty)
             return result

@@ -22,8 +22,9 @@ from kafka_connect_plugins_spark.plans.lake_table import MergeStats
 class MetricsLog:
     """Append-only JSONL epoch log: one line per applied (or skipped) epoch.
 
-    Each line carries the stream id, epoch id, event count, merge timings,
-    events/sec, and the per-source-partition lineage ``{partition:
+    Each line carries the stream id, epoch id, event count, rows written,
+    schema changes, merge timings (total and per phase), events/sec, and
+    the per-source-partition lineage ``{partition:
     {events, max_lsn}}`` — the CDC log-position record that lets an operator
     answer "how far has partition 3 been applied?" without scanning data.
     """
@@ -41,8 +42,12 @@ class MetricsLog:
             "source_rows": stats.source_rows,
             "dirty_buckets": stats.dirty_buckets,
             "total_buckets": stats.total_buckets,
+            "rows_written": stats.rows_written,
             "schema_added_columns": stats.schema_added_columns,
+            "schema_widened_columns": stats.schema_widened_columns,
             "seconds": round(stats.seconds, 3),
+            # per-phase wall seconds: stats / write / commit
+            "phases": dict(stats.phases),
             "events_per_sec": round(stats.source_rows / stats.seconds)
             if stats.seconds > 0 and not stats.skipped
             else 0,

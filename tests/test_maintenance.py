@@ -354,6 +354,11 @@ class TestOptimisticCommit:
 
 class TestHistory:
     def test_snapshot_log(self, spark, table):
+        src = spark.createDataFrame(
+            [("repo-0", "new.py", 9000, False, "x")],
+            "repo string, path string, _lsn long, _tombstone boolean, content string",
+        )
+        table.merge(src, epoch_id=4, stream_id="s2", mode="defer")
         table.update_where(F.col("repo") == "repo-1", {"content": F.lit("u")})
         table.delete_where(F.col("repo") == "repo-2")
         h = table.history()
@@ -363,6 +368,13 @@ class TestHistory:
         ops = [e["summary"].get("op") for e in h]
         assert ops[0] == "delete_where" and ops[1] == "update_where"
         assert h[0]["parent"] == h[1]["version"]
+        # epoch merges record their stream and epoch, in both modes
+        merges = [
+            (e["summary"]["stream_id"], e["summary"]["epoch_id"],
+             e["summary"].get("mode", "rewrite"))
+            for e in h[2:4]
+        ]
+        assert merges == [("s2", 4, "defer"), ("default", 0, "rewrite")]
         assert all(
             e["committed_at_ms"] is None or e["committed_at_ms"] > 0 for e in h
         )

@@ -61,8 +61,13 @@ def test_minhash_lsh_pairs_finds_neardups_only(spark):
 
 
 def test_simhash_distance_tracks_similarity(spark):
-    df = _docs(spark).select("doc_id", simhash(F.col("text")).alias("s"))
+    docs = _docs(spark).unionByName(spark.createDataFrame(
+        [(4, None, "s0"), (5, "", "s0")], "doc_id long, text string, source string"
+    ))
+    df = docs.select("doc_id", simhash(F.col("text")).alias("s"))
     s = {r["doc_id"]: r["s"] for r in df.collect()}
+    # NULL text gives a NULL signature, empty text the zero signature
+    assert s.pop(4) is None and s[5] == 0
     assert s[0] == s[3]
     ham = lambda a, b: bin(a ^ b).count("1")  # noqa: E731
     assert ham(s[0], s[1]) < ham(s[0], s[2])

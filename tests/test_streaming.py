@@ -5,7 +5,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from kafka_connect_plugins_spark.engine import create_repo_table
+from kafka_connect_plugins_spark.engine import apply_batch, create_repo_table
 from kafka_connect_plugins_spark.plans.lake_table import LakeTable
 from kafka_connect_plugins_spark.sources.changelog import changelog, expected_final_state
 from kafka_connect_plugins_spark.streaming import MetricsLog, StreamingIngest
@@ -48,6 +48,22 @@ def test_stream_drain_matches_oracle(spark, tmp_path):
     entries = metrics.entries()
     assert len(entries) == len(stats)
     assert all(e["events_per_sec"] > 0 for e in entries)
+
+
+def test_epoch_line_carries_merge_phases(spark, tmp_path):
+    # The epoch log answers "where did this epoch's time go?" on its own:
+    # the merge's stats / write / commit phases, rows written and schema
+    # changes all reach the JSONL line.
+    table = create_repo_table(spark, str(tmp_path / "t"), num_buckets=4)
+    events = changelog(spark, 200, num_repos=2, paths_per_repo=10)
+    stats = apply_batch(table, events, epoch_id=0, stream_id="s1")
+    metrics = MetricsLog(str(tmp_path / "metrics.jsonl"))
+    metrics.record("s1", stats)
+    (line,) = metrics.entries()
+    assert {"stats", "write", "commit"} <= set(line["phases"])
+    assert all(line["phases"][p] >= 0 for p in ("stats", "write", "commit"))
+    assert line["rows_written"] == stats.rows_written > 0
+    assert line["schema_widened_columns"] == []
 
 
 def test_checkpoint_resume_continues_from_offset(spark, tmp_path):
